@@ -76,9 +76,10 @@ final class Graft private[graft] (spark: SparkSession, dir: String) {
     * compacted store also serves its id-encoded sidecar, so simple
     * BGPs join on 8-byte term ids and decode at the result edge.
     */
-  def query(text: String): DataFrame =
-    Sparql.query(spark, store.snapshot(), text,
-      encoded = store.snapshotEncoded())
+  def query(text: String): DataFrame = {
+    val parsed = graft.sparql.SparqlParser.parse(text)
+    Sparql.frame(spark, store.compiler(parsed), parsed)
+  }
 
   /** W3C SPARQL 1.1 Results JSON for any query form: SELECT bindings
     * (streamed serialization), the ASK boolean envelope, and a
@@ -111,19 +112,12 @@ final class Graft private[graft] (spark: SparkSession, dir: String) {
           "DataFrame form instead"
       else s"${if (parsed.isAsk) "ASK" else "SELECT"} results have no " +
         s"'$fmt' serialization (supported: ${allowed.toSeq.sorted.mkString(", ")})")
-    val c = new graft.sparql.Compiler(spark, store.snapshot(),
-      fromGraphs = parsed.fromGraphs, fromNamed = parsed.fromNamed,
-      encoded = store.snapshotEncoded())
-    Sparql.evaluate(c, parsed) match {
-      case Sparql.AskResult(b) =>
-        if (fmt == "json") SparqlJson.ask(b) else graft.rio.SparqlXml.ask(b)
-      case Sparql.SelectResult(sol) => fmt match {
-        case "json" => SparqlJson.select(sol)
-        case "xml" => graft.rio.SparqlXml.select(sol)
-        case "csv" => graft.rio.SparqlCsvTsv.csv(sol)
-        case _ => graft.rio.SparqlCsvTsv.tsv(sol)
-      }
-      case Sparql.GraphResult(triples) => SparqlJson.selectLexical(triples)
+    Sparql.evaluate(store.compiler(parsed), parsed) match {
+      case Sparql.AskResult(b) if fmt == "xml" => graft.rio.SparqlXml.ask(b)
+      case Sparql.SelectResult(sol) if fmt == "xml" => graft.rio.SparqlXml.select(sol)
+      case Sparql.SelectResult(sol) if fmt == "csv" => graft.rio.SparqlCsvTsv.csv(sol)
+      case Sparql.SelectResult(sol) if fmt == "tsv" => graft.rio.SparqlCsvTsv.tsv(sol)
+      case json => SparqlJson.result(json)
     }
   }
 

@@ -559,8 +559,9 @@ object TextAnalysis {
     * rewrite runs a PARTIAL rank-limit before the exchange (rk <= cap
     * is a pushable row_number predicate), so every map partition ships
     * at most `cap` rows per source — a skewed mega-source costs its
-    * scan but never dominates the shuffle (verified in ExplainAudit:
-    * Partial WindowGroupLimit below the Exchange, Final above it).
+    * scan but never dominates the shuffle (`graft.tools.PlanDump` on
+    * t_source_cap shows Partial WindowGroupLimit below the Exchange,
+    * Final above it).
     */
   def sourceCap(docs: org.apache.spark.sql.DataFrame,
       cap: Int = 10): org.apache.spark.sql.DataFrame = {

@@ -38,10 +38,11 @@ import graft.sparql.{Sparql, SparqlParser}
   *    (`:223-231`); otherwise SELECT → SPARQL-JSON bytes, placeholder
   *    document on failure (`:240-261`)
   *
-  * Isolation: queries run on [[QuadStore.snapshot]] — last committed
-  * segment set — instead of the reference's shared read lock, so
-  * SELECTs are never interleaved with half-applied inserts (the
-  * reference quirk SURVEY flags at A14).
+  * Isolation: each query compiles over one [[QuadStore.pin]] — the
+  * last committed segment set, read from the manifest once for both
+  * the struct and the id plane — instead of the reference's shared
+  * read lock, so SELECTs are never interleaved with half-applied
+  * inserts (the reference quirk SURVEY flags at A14).
   */
 final class MochaAdapter(spark: SparkSession, store: QuadStore, stagingDir: String) {
 
@@ -179,32 +180,24 @@ final class MochaAdapter(spark: SparkSession, store: QuadStore, stagingDir: Stri
   /** Execute a task; returns the framed result for eval storage. */
   def receiveTask(taskId: String, data: Array[Byte]): Array[Byte] = {
     val queryString = new String(data, UTF_8)
-    val upper = queryString.toUpperCase
     // ref branches on the literal "INSERT DATA" (`:223`); extended here
-    // to the full ground-update surface (DELETE DATA / CLEAR / DROP)
-    if (upper.contains("INSERT DATA") || upper.contains("DELETE DATA") ||
-        upper.matches("(?s)\\s*(CLEAR|DROP)\\s.*")) {
-      store.executeUpdate(queryString)
-      insertCount.incrementAndGet()
-      frame(taskId, Array.emptyByteArray) // empty-result ACK (ref `:231`)
-    } else {
-      val json =
-        try {
-          val parsed = SparqlParser.parse(queryString)
-          val c = new graft.sparql.Compiler(spark, store.snapshot(),
-            fromGraphs = parsed.fromGraphs, fromNamed = parsed.fromNamed,
-            encoded = store.snapshotEncoded())
-          graft.sparql.Sparql.evaluate(c, parsed) match {
-            case graft.sparql.Sparql.AskResult(b) => SparqlJson.ask(b)
-            case graft.sparql.Sparql.SelectResult(sol) => SparqlJson.select(sol)
-            case graft.sparql.Sparql.GraphResult(triples) =>
-              SparqlJson.selectLexical(triples) // graph form: lexical envelope
+    // to every update form the store executes, detected by the store's
+    // own verb matcher (string literals and variable names ignored)
+    store.updateAction(queryString) match {
+      case Some(update) =>
+        update()
+        insertCount.incrementAndGet()
+        frame(taskId, Array.emptyByteArray) // empty-result ACK (ref `:231`)
+      case None =>
+        val json =
+          try {
+            val parsed = SparqlParser.parse(queryString)
+            SparqlJson.result(Sparql.evaluate(store.compiler(parsed), parsed))
+          } catch {
+            case _: Throwable => SparqlJson.failurePlaceholder // ref `:251-258`
           }
-        } catch {
-          case _: Throwable => SparqlJson.failurePlaceholder // ref `:251-258`
-        }
-      selectCount.incrementAndGet()
-      frame(taskId, json.getBytes(UTF_8))
+        selectCount.incrementAndGet()
+        frame(taskId, json.getBytes(UTF_8))
     }
   }
 

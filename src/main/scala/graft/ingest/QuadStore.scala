@@ -2,8 +2,9 @@ package graft.ingest
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.rio.Turtle
 
@@ -56,14 +57,46 @@ final class QuadStore(spark: SparkSession, dir: String) {
     * identity — the append-only design SURVEY §2.B's update table
     * prescribes. Compaction folds tombstones away physically.
     */
-  def snapshot(): DataFrame = {
+  def snapshot(): DataFrame = structView(committedSegments())
+
+  /** [[snapshot]] and [[snapshotEncoded]] of ONE manifest read: a
+    * commit can never give a query planes of different segment sets.
+    */
+  def pin(): (DataFrame, Option[graft.core.EncodedQuads]) = {
     val segs = committedSegments()
+    (structView(segs), encodedView(segs))
+  }
+
+  /** A compiler for `query`'s dataset over one [[pin]]. */
+  def compiler(query: graft.sparql.SparqlParser.Query): graft.sparql.Compiler = {
+    val (quads, enc) = pin()
+    new graft.sparql.Compiler(spark, quads, fromGraphs = query.fromGraphs,
+      fromNamed = query.fromNamed, encoded = enc)
+  }
+
+  /** The one place the store reads its files: a declared schema means
+    * no schema-inference job, and a missing file fails naming its path.
+    */
+  private def read(file: String): DataFrame =
+    spark.read.schema(schemaOf(file)).parquet(root.resolve(file).toString)
+
+  private val Term = "STRUCT<lex: STRING, kind: INT, dt: STRING, lang: STRING, num: DOUBLE>"
+
+  /** Parquet schema of a store file: `-enc` id quads, `-dict` term
+    * dictionary, otherwise a quads segment.
+    */
+  private[graft] def schemaOf(file: String): String =
+    if (file.endsWith("-enc")) "g STRING, s_id BIGINT, p_id BIGINT, o_id BIGINT"
+    else if (file.endsWith("-dict")) s"id BIGINT, term $Term"
+    else s"g STRING, s $Term, p $Term, o $Term"
+
+  private def structView(segs: Seq[String]): DataFrame = {
     val (del, pos) = segs.zipWithIndex.partition(_._1.startsWith("seg-del-"))
-    if (pos.isEmpty) return emptyQuads()
+    if (pos.isEmpty)
+      return spark.createDataFrame(java.util.List.of[Row](), StructType.fromDDL(schemaOf("seg")))
     def readSeq(s: Seq[(String, Int)]): DataFrame =
-      s.map { case (seg, i) =>
-        spark.read.parquet(root.resolve(seg).toString).withColumn("__seq", lit(i))
-      }.reduce(_.unionByName(_))
+      s.map { case (seg, i) => read(seg).withColumn("__seq", lit(i)) }
+        .reduce(_.unionByName(_))
     val base = readSeq(pos)
     if (del.isEmpty) base.drop("__seq")
     else {
@@ -80,12 +113,6 @@ final class QuadStore(spark: SparkSession, dir: String) {
         .filter(col("__del_seq").isNull || col("__seq") > col("__del_seq"))
         .select(col("g"), col("s"), col("p"), col("o"))
     }
-  }
-
-  private def emptyQuads(): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, Turtle.Term, Turtle.Term, Turtle.Term)]
-      .toDF("g", "s", "p", "o")
   }
 
   /** Single-writer atomic commit: segment write → manifest swap. */
@@ -107,12 +134,10 @@ final class QuadStore(spark: SparkSession, dir: String) {
       // size in encode work; [[snapshotEncoded]] unions the sidecars
       // so the query hot path keeps exchanging 8-byte longs across
       // streaming ingest instead of degrading to the struct plane
-      // until the next compact(). Tombstones get no sidecar: delete
-      // identity is full-term exact (dt/lang included) which the
-      // (lex, kind) ids cannot express — a delete staleness-gates the
-      // sidecar instead (rare path; compaction folds it away).
+      // until the next compact(). Tombstones get a NEGATIVE sidecar
+      // (below).
       if (!seg.startsWith("seg-del-")) {
-        val written = spark.read.parquet(root.resolve(seg).toString)
+        val written = read(seg)
         graft.core.TermDictionary.encode(written)
           .write.mode("overwrite").parquet(root.resolve(s"$seg-enc").toString)
         // the collision check inside build() is SEGMENT-local here;
@@ -135,7 +160,7 @@ final class QuadStore(spark: SparkSession, dir: String) {
         // columns. (A DELETE DATA for a quad that never existed hides
         // nothing → empty negative sidecar, so it cannot cancel a
         // future insert.)
-        val written = spark.read.parquet(root.resolve(seg).toString)
+        val written = read(seg)
         val tomb = written.select(
           col("g").as("__t0"),
           col("s")("lex").as("__t1"), col("s")("kind").as("__t2"),
@@ -202,12 +227,8 @@ final class QuadStore(spark: SparkSession, dir: String) {
   private def maybeGlobalIdAudit(): Unit = {
     val pos = committedSegments().filterNot(_.startsWith("seg-del-"))
     if (pos.length < 2 || pos.length % GlobalAuditEvery != 0) return
-    val dictPaths = pos.map(s => root.resolve(s"$s-dict"))
-      .filter(Files.exists(_))
-    if (dictPaths.lengthIs < 2) return
     graft.core.TermDictionary.auditUnion(
-      dictPaths.map(p => spark.read.parquet(p.toString))
-        .reduce(_.unionByName(_)))
+      pos.map(s => read(s"$s-dict")).reduce(_.unionByName(_)))
   }
 
   /** Bulk load one version phase: parse all staged Turtle files into
@@ -257,7 +278,7 @@ final class QuadStore(spark: SparkSession, dir: String) {
     // compaction's roles are folding tombstones back into the encoded
     // view, restoring the sorted/partitioned layout, and re-running
     // the GLOBAL identities-vs-ids collision audit.
-    val compacted = spark.read.parquet(root.resolve(seg).toString)
+    val compacted = read(seg)
     graft.core.TermDictionary.encode(compacted)
       .repartition(col("g"))
       .sortWithinPartitions(col("p_id"), col("s_id"))
@@ -271,7 +292,7 @@ final class QuadStore(spark: SparkSession, dir: String) {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** The id-encoded view of the CURRENT snapshot, if one is valid.
+  /** The id-encoded view of the CURRENT snapshot; None when empty.
     *
     * Every positive segment carries its own `-enc`/`-dict` sidecar
     * (written at commit — segment-local encoding composes because ids
@@ -296,37 +317,26 @@ final class QuadStore(spark: SparkSession, dir: String) {
     * representative, which is exactly the id plane's identity
     * semantics (struct-least representative per (lex, kind)).
     *
-    * Returns None — struct-plane fallback — only when a segment
-    * predates the sidecar convention. Compaction restores the pristine
-    * single-sidecar fast path (no exceptAll in the per-query plan).
+    * Every commit writes its sidecars before the manifest swap, so a
+    * missing sidecar fails the read naming its path.
     */
-  def snapshotEncoded(): Option[graft.core.EncodedQuads] = {
-    val segs = committedSegments()
-    if (segs.isEmpty) return None
+  def snapshotEncoded(): Option[graft.core.EncodedQuads] =
+    encodedView(committedSegments())
+
+  private def encodedView(segs: Seq[String]): Option[graft.core.EncodedQuads] = {
     val (del, pos) = segs.partition(_.startsWith("seg-del-"))
-    if (pos.isEmpty) return None // fully-tombstoned store = empty quads
-    val side = pos.map(s => (root.resolve(s"$s-enc"), root.resolve(s"$s-dict")))
-    if (side.exists { case (e, d) => !Files.exists(e) || !Files.exists(d) })
-      return None
-    val negPaths = del.map(s => root.resolve(s"$s-enc"))
-    if (negPaths.exists(p => !Files.exists(p))) return None
+    if (pos.isEmpty) return None
     // exceptAll matches POSITIONALLY and a compacted sidecar's
     // partitionBy("g") layout reorders columns — canonicalize both
     // sides before the multiset difference
-    val encCols = Seq("g", "s_id", "p_id", "o_id")
-    val posEnc = side.map(p => spark.read.parquet(p._1.toString))
-      .reduce(_.unionByName(_)).select(encCols.map(col): _*)
-    val enc =
-      if (negPaths.isEmpty) posEnc
-      else posEnc.exceptAll(
-        negPaths.map(p => spark.read.parquet(p.toString))
-          .reduce(_.unionByName(_)).select(encCols.map(col): _*))
-    val dicts = side.map(p => spark.read.parquet(p._2.toString))
-      .reduce(_.unionByName(_))
+    def enc(s: Seq[String]): DataFrame = s.map(seg => read(s"$seg-enc"))
+      .reduce(_.unionByName(_)).select(col("g"), col("s_id"), col("p_id"), col("o_id"))
+    val quads = if (del.isEmpty) enc(pos) else enc(pos).exceptAll(enc(del))
+    val dicts = pos.map(s => read(s"$s-dict")).reduce(_.unionByName(_))
     val dict =
-      if (side.lengthIs == 1) dicts
+      if (pos.lengthIs == 1) dicts
       else dicts.groupBy("id").agg(min("term").as("term"))
-    Some(graft.core.EncodedQuads(enc, dict))
+    Some(graft.core.EncodedQuads(quads, dict))
   }
 
   /** Materialize OWL-Horst entailments INTO the store: run the
@@ -539,8 +549,8 @@ final class QuadStore(spark: SparkSession, dir: String) {
           s"DELETE WHERE supports BGP/GRAPH/FILTER patterns, got $other")
     }
     val op = rw(strip(parsedOp))
-    val compiler = new graft.sparql.Compiler(spark, snapshot(),
-      encoded = snapshotEncoded())
+    val (quads, enc) = pin()
+    val compiler = new graft.sparql.Compiler(spark, quads, encoded = enc)
     // template vars are consumed OUTSIDE the compiled tree (tombstone
     // instantiation below) — declare them so the id plane's late
     // materialization keeps and decodes them
@@ -629,7 +639,7 @@ final class QuadStore(spark: SparkSession, dir: String) {
     val usingGraphs = parsed.usingGraphs
     val usingNamed = parsed.usingNamed
 
-    val snap = snapshot()
+    val (snap, enc) = pin()
     // WHERE dataset (§3.1.3): USING clauses win outright; otherwise a
     // WITH graph becomes the default graph for matching (its named
     // plane stays the full dataset — WITH only redirects patterns
@@ -644,7 +654,7 @@ final class QuadStore(spark: SparkSession, dir: String) {
       // the update WHERE matches over the same id plane queries use
       // (per-segment sidecars keep it live across appends) — at scale
       // the match joins 8-byte ids instead of term structs
-      encoded = snapshotEncoded(),
+      encoded = enc,
       namedAllGraphs = withScopesWhere)
     def stripOp(op: Op): Op = op match {
       case Project(i, _) => stripOp(i)
@@ -804,12 +814,17 @@ final class QuadStore(spark: SparkSession, dir: String) {
     if (src != dst) { copyGraph(src, dst); clearGraph(src) }
   }
 
-  /** Dispatch any supported SPARQL Update string. Verb detection runs
-    * on a copy with string-literal CONTENTS blanked — an inserted
-    * literal like `"try DELETE {x} WHERE {y}"` must not reroute an
-    * INSERT DATA to the modify path.
+  /** Dispatch any supported SPARQL Update string. */
+  def executeUpdate(update: String): Unit =
+    updateAction(update).getOrElse(throw new IllegalArgumentException(
+      s"unsupported update: ${update.take(80)}"))()
+
+  /** The operation an update string names; None for a query. Verb
+    * detection runs on a copy with string-literal CONTENTS and variable
+    * names blanked — an inserted literal like `"try DELETE {x} WHERE
+    * {y}"` must not reroute an INSERT DATA to the modify path.
     */
-  def executeUpdate(update: String): Unit = {
+  private[ingest] def updateAction(update: String): Option[() => Unit] = {
     val ClearRe = """(?is)\s*(?:CLEAR|DROP)\s+(?:SILENT\s+)?GRAPH\s*<([^>]*)>\s*""".r
     val ClearPlaneRe = """(?is)\s*(?:CLEAR|DROP)\s+(?:SILENT\s+)?(DEFAULT|NAMED|ALL)\s*""".r
     val GraphMgmtRe =
@@ -817,23 +832,26 @@ final class QuadStore(spark: SparkSession, dir: String) {
     val LoadRe =
       """(?is)\s*LOAD\s+(SILENT\s+)?<([^>]*)>(?:\s+INTO\s+GRAPH\s*<([^>]*)>)?\s*""".r
     val blanked = update.replaceAll("\"(?:[^\"\\\\]|\\\\.)*\"", "\"\"")
+      .replaceAll("[?$]\\w+", "?v")
     val upper = blanked.toUpperCase
     update match {
-      case LoadRe(silent, doc, g) => load(doc, Option(g), silent != null)
-      case ClearRe(g) => clearGraph(g)
-      case ClearPlaneRe(plane) => clearPlane(plane)
-      case GraphMgmtRe(verb, src, dst) => verb.toUpperCase match {
+      case LoadRe(silent, doc, g) => Some(() => load(doc, Option(g), silent != null))
+      case ClearRe(g) => Some(() => clearGraph(g))
+      case ClearPlaneRe(plane) => Some(() => clearPlane(plane))
+      case GraphMgmtRe(verb, src, dst) => Some(() => verb.toUpperCase match {
         case "COPY" => copyGraph(src, dst)
         case "MOVE" => moveGraph(src, dst)
         case _ => addGraph(src, dst)
-      }
-      case u if upper.contains("DELETE DATA") => deleteData(u)
-      case u if upper.contains("DELETE WHERE") => deleteWhere(u)
+      })
+      case u if upper.contains("DELETE DATA") => Some(() => deleteData(u))
+      case u if upper.contains("DELETE WHERE") => Some(() => deleteWhere(u))
       // general Modify: [WITH] [DELETE{}] [INSERT{}] WHERE{} — must
       // have a WHERE clause (INSERT…WITH protocol form has none)
       case u if """(?is).*\b(?:DELETE|INSERT)\s*\{.*\bWHERE\s*\{.*""".r.matches(blanked) =>
-        modify(u)
-      case u => insertData(u)
+        Some(() => modify(u))
+      case u if """(?s).*\bINSERT\s+DATA\b.*""".r.matches(upper) || rewriteInsertWith(u) != u =>
+        Some(() => insertData(u))
+      case _ => None
     }
   }
 

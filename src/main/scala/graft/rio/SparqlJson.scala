@@ -22,6 +22,13 @@ import graft.rdf.Rdf
   */
 object SparqlJson {
 
+  /** The JSON document of any query form (graphs: lexical envelope). */
+  def result(evaled: graft.sparql.Sparql.Evaled): String = evaled match {
+    case graft.sparql.Sparql.AskResult(b) => ask(b)
+    case graft.sparql.Sparql.SelectResult(sol) => select(sol)
+    case graft.sparql.Sparql.GraphResult(triples) => selectLexical(triples)
+  }
+
   private def esc(s: String): String = {
     val b = new StringBuilder
     s.foreach {

@@ -95,15 +95,18 @@ object Sparql {
       encoded: Option[graft.core.EncodedQuads] = None,
       statsCap: Int = PredicateStatsCap): DataFrame = {
     val parsed = SparqlParser.parse(text)
-    val c = new Compiler(spark, quads, stats, parsed.fromGraphs, parsed.fromNamed,
-      encoded, statsCap = statsCap)
+    frame(spark, new Compiler(spark, quads, stats, parsed.fromGraphs,
+      parsed.fromNamed, encoded, statsCap = statsCap), parsed)
+  }
+
+  /** [[evaluate]] in [[query]]'s result-DataFrame form. */
+  def frame(spark: SparkSession, c: Compiler, parsed: SparqlParser.Query): DataFrame =
     evaluate(c, parsed) match {
       case AskResult(b) => spark.range(1)
         .select(org.apache.spark.sql.functions.lit(if (b) "true" else "false").as("ask"))
       case SelectResult(sol) => c.toStrings(sol)
       case GraphResult(triples) => triples
     }
-  }
 
   /** Compile to term-struct solutions (engine-internal form). */
   def solutions(spark: SparkSession, quads: DataFrame, text: String): DataFrame = {

@@ -748,6 +748,42 @@ class IngestSpec extends GraftSuite {
     assert(new String(body3, UTF_8) == SparqlJson.failurePlaceholder)
   }
 
+  test("task channel: every update form reaches the store, a SELECT quoting one stays a query") {
+    val qs = Files.createTempDirectory("qs-route")
+    val store = new QuadStore(spark, qs.toString)
+    val ad = new MochaAdapter(spark, store, Files.createTempDirectory("stg-route").toString)
+    def task(id: String, text: String): String = {
+      val buf = ByteBuffer.wrap(ad.receiveTask(id, text.getBytes(UTF_8)))
+      assert(ad.readString(buf) == id)
+      val body = new Array[Byte](buf.getInt()); buf.get(body)
+      new String(body, UTF_8)
+    }
+    def count(g: String): Long = store.snapshot().filter(col("g") === g).count()
+    store.insertData("""INSERT DATA { GRAPH <ga> {
+      <s:1> <p:x> "a" . <s:2> <p:x> "b" . <s:3> <p:y> "c" . } }""")
+
+    // an update verb inside a literal, or a variable named ?delete, must
+    // not turn a SELECT into an update
+    val json = task("q1",
+      """SELECT ?delete WHERE { ?delete <p:x> ?o FILTER(?o != "INSERT DATA { <s:9> <p:x> <s:1> }") }""")
+    assert(json.contains(""""vars":["delete"]""") && json.contains(""""value":"s:2""""), json)
+    assert(count("ga") == 3)
+
+    val nt = Files.createTempDirectory("qs-route-doc").resolve("doc.nt")
+    Files.writeString(nt, "<s:7> <p:x> \"l\" .\n")
+    val updates = Seq(
+      """DELETE WHERE { GRAPH <ga> { ?s <p:y> ?o } }""",
+      """DELETE { GRAPH <ga> { ?s <p:x> "b" } } INSERT { GRAPH <gb> { ?s <p:x> "b2" } }
+        |WHERE { GRAPH <ga> { ?s <p:x> "b" } }""".stripMargin,
+      s"LOAD <$nt> INTO GRAPH <gl>",
+      "COPY <ga> TO <gc>",
+      "MOVE <gc> TO <gd>",
+      "ADD <gb> TO <gd>")
+    updates.zipWithIndex.foreach { case (u, i) => assert(task(s"u$i", u).isEmpty, u) }
+    assert(ad.counters == (updates.size, 1))
+    assert(Seq("ga", "gb", "gc", "gd", "gl").map(count) == Seq(1L, 1L, 0L, 2L, 1L))
+  }
+
   test("ASK task returns boolean envelope") {
     val qs = Files.createTempDirectory("qs5")
     val store = new QuadStore(spark, qs.toString)
